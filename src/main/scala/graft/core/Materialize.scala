@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 
 /** Lifecycle management for `localCheckpoint`'d intermediates.
   *
@@ -55,12 +55,16 @@ object Materialize {
     try body finally releaseAll(spark, before)
   }
 
-  /** The block-manager-backed RDD of a checkpointed/persisted frame,
-    * if its plan is the `LogicalRDD` a `localCheckpoint` leaves
-    * behind.
+  /** The block-manager-backed RDD of a checkpointed/persisted frame:
+    * the `LogicalRDD` a `localCheckpoint` leaves behind, or the
+    * `ExternalRDD` of a pinned RDD turned into a frame (the result of
+    * an RDD fixpoint loop, see [[KeyedRdds.fixpoint]]).
     */
   def checkpointRdd(df: DataFrame): Option[RDD[_]] =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
+    df.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRDD => lr.rdd
+      case er: ExternalRDD[_] => er.rdd
+    }
 
   /** Release one checkpointed frame's blocks (no-op for plans that
     * carry no checkpoint). Only call once every consumer of the frame

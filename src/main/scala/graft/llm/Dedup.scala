@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.KeyedRdds
 import graft.functions.GraftFunctions.md5Prefix60Col
 
 import graft.llm.AtRestStore.{tableIfExists, tablePath, tombstoneAppend, tombstoneClear}
@@ -309,8 +310,8 @@ object Dedup {
     * sized, like `fitIvf`'s centroids), and a map-only kernel rewrite
     * into a `localCheckpoint` that truncates the growing lineage.
     * Rounds are inherently sequential (each alphabet depends on the
-    * last); the corpus passes are what parallelize. Blocks release
-    * via the caller's session hygiene (graft.core.Materialize).
+    * last); the corpus passes are what parallelize. Every checkpoint
+    * is released by the time the (driver-local) merge table returns.
     */
   def bpeTrain(df: DataFrame, idCol: String, textCol: String,
                rounds: Int): DataFrame = {
@@ -318,10 +319,13 @@ object Dedup {
     val spark = df.sparkSession
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
-    var toks = df
+    // the checkpoint the merge chain re-applies over; released when
+    // superseded and before returning (the merge table is local)
+    var pinned = df
       .select(graft.llm.TextAnalysis.tokensCol(col(textCol)).as("w"))
       .filter(size(col("w")) > 1)
       .localCheckpoint()
+    var toks = pinned
     // Round-19 (guide §1.2 "fewer passes"): the loop used to
     // localCheckpoint the WHOLE re-tokenized corpus after every merge
     // — rounds+1 full corpus materializations for a 3-round trainer.
@@ -358,10 +362,16 @@ object Dedup {
         toks = toks
           .select(call_function("bpe_merge", col("w"), lit(l), lit(r)).as("w"))
         sinceCkpt += 1
-        if (sinceCkpt == 8) { toks = toks.localCheckpoint(); sinceCkpt = 0 }
+        if (sinceCkpt == 8) {
+          toks = toks.localCheckpoint()
+          graft.core.Materialize.release(pinned)
+          pinned = toks
+          sinceCkpt = 0
+        }
         round += 1
       }
     }
+    graft.core.Materialize.release(pinned)
     merges.toSeq.toDF("round", "lhs", "rhs", "pair_count")
   }
 
@@ -1946,47 +1956,6 @@ object Dedup {
       .filter(col("n_docs") > 1)
   }
 
-  /** Lineage-truncation strategy for the iterative CC loops:
-    * executor-pinned `localCheckpoint` by default, RELIABLE
-    * `checkpoint()` into `dir` when given (survives executor loss —
-    * the dynamic-allocation / spot-instance posture at cluster scale).
-    *
-    * The checkpoint directory is a GLOBAL SparkContext setting, so we
-    * only set it when unset; a concurrent caller asking for a
-    * DIFFERENT directory on the same context would otherwise race
-    * (last writer wins) and both jobs would silently share one
-    * directory. That conflict is an error here, not a silent rebind.
-    */
-  private def checkpointed(sample: DataFrame,
-                           dir: Option[String]): DataFrame => DataFrame =
-    dir match {
-      // LAZY on purpose: an eager checkpoint is one extra Spark job
-      // per call, and the CC loops checkpoint 2-3 frames per round.
-      // Every checkpointed frame here is materialized immediately
-      // afterwards anyway (the convergence probe or the next round's
-      // join), which caches the blocks then — same truncation, no
-      // dedicated job. Measured ~25% off q70's wall on shallow graphs.
-      // (The RELIABLE branch below stays eager: a lazy checkpoint()
-      // recomputes the plan a second time when the checkpoint files
-      // are written, since the RDD isn't persisted first.)
-      case None => _.localCheckpoint(eager = false)
-      case Some(d) =>
-        val sc = sample.sparkSession.sparkContext
-        val want = new org.apache.hadoop.fs.Path(d).toUri.getPath
-        sc.getCheckpointDir match {
-          case None => sc.setCheckpointDir(d)
-          case Some(cur) =>
-            // setCheckpointDir appends a random UUID subdir; compare on
-            // the requested prefix
-            val curPath = new org.apache.hadoop.fs.Path(cur).toUri.getPath
-            require(curPath.startsWith(want),
-              s"SparkContext checkpoint dir already set to $cur; refusing to " +
-                s"rebind it to $d mid-flight (global setting — set it once per " +
-                "application, or pass checkpointDir=None for localCheckpoint)")
-        }
-        _.checkpoint()
-    }
-
   /** Connected components over a near-dup pair graph — the closure of
     * the fuzzy-dedup pipeline: LSH emits PAIRS, but the removal
     * decision needs CLUSTERS (a∼b, b∼c ⇒ {a,b,c} keep one doc).
@@ -2004,8 +1973,11 @@ object Dedup {
     * (a few rounds); for adversarial long-chain graphs the
     * large-star/small-star variant (O(log n) rounds) would replace
     * the loop body — same per-round shuffle shape, so the 100 TB cost
-    * model is unchanged. The per-round `count` action is the
-    * convergence check, standard for iterative Spark.
+    * model is unchanged. The loop is [[KeyedRdds.fixpoint]]: the
+    * per-round `count` that materializes the labels also reads the
+    * changed-labels accumulator, standard for iterative Spark. The
+    * returned frame reads the final labels' pinned blocks;
+    * [[graft.core.Materialize.release]] frees them once consumed.
     *
     * Checkpointing: `localCheckpoint` (default) pins blocks to
     * executors — right for a static cluster, fatal under dynamic
@@ -2017,97 +1989,44 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
                           checkpointDir: Option[String] = None,
                           compress: Boolean = false): DataFrame = {
-    def dbg[T](tag: String)(body: => T): T =
-      if (!sys.env.contains("GRAFT_CC_DEBUG")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"CC $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-    // Round-18 rewrite (guide §2.4 "remove shuffles outright" + §1.2):
-    // the former DataFrame loop re-shuffled the EDGE table and the
-    // label table on every round (a lazy localCheckpoint leaves
-    // UnknownPartitioning, so Catalyst re-exchanged both join inputs
-    // each time) and paid ~0.2–0.35 s of per-round planning/stage
-    // latency at local[32] — measured this round: the convergence
-    // probes were ~0.05 s, the rest was plan construction + the
-    // re-exchanges. This loop instead runs on pair RDDs with ONE
-    // HashPartitioner established up front: the edge table is
-    // partitioned by src ONCE and never moves again; each round
-    // shuffles only the propagated (dst, minLab) updates into a
-    // map-side-combining reduceByKey (+ the pointer rows under
+    // Pair RDDs with ONE HashPartitioner established up front: the
+    // edge table is partitioned by src ONCE and never moves again;
+    // each round shuffles only the propagated (dst, minLab) updates
+    // into a map-side-combining reduceByKey (+ the pointer rows under
     // `compress`), and the label join/leftOuterJoin are narrow
-    // (partitioner-aligned). Per round: one plan-free job, one shuffle
-    // of O(nodes) longs — at 100 TB that is also strictly fewer bytes
-    // moved per round than re-exchanging the O(edges) table. The
-    // fixpoint (component minima) is identical; the convergence flag
-    // is an accumulator folded into the materializing count (task
-    // retries can only over-count "changed", never fake convergence).
+    // (partitioner-aligned). A DataFrame loop would re-plan every
+    // round and re-exchange both join inputs (a lazy localCheckpoint
+    // leaves UnknownPartitioning) — 0.2–0.35 s per round at local[32]
+    // and O(edges) bytes moved per round at 100 TB. Per round here:
+    // one plan-free job, one shuffle of O(nodes) longs.
     val spark = pairs.sparkSession
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    val reliableDir = checkpointDir.map { d =>
-      val sc = spark.sparkContext
-      val want = new org.apache.hadoop.fs.Path(d).toUri.getPath
-      sc.getCheckpointDir match {
-        case None => sc.setCheckpointDir(d)
-        case Some(cur) =>
-          val curPath = new org.apache.hadoop.fs.Path(cur).toUri.getPath
-          require(curPath.startsWith(want),
-            s"SparkContext checkpoint dir already set to $cur; refusing to " +
-              s"rebind it to $d mid-flight (global setting — set it once per " +
-              "application, or pass checkpointDir=None for localCheckpoint)")
-      }
-      d
-    }
-    // truncate lineage + pin blocks, reliable when a dir was given
-    // (survives executor loss — the dynamic-allocation posture); the
-    // reliable rdd.checkpoint() requires a persist first or it would
-    // recompute the plan once more for the checkpoint write
-    def pin[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      if (reliableDir.isDefined) rdd.checkpoint() else rdd.localCheckpoint()
-      rdd
-    }
+    val reliable = KeyedRdds.reliableCheckpoints(spark.sparkContext, checkpointDir)
     // both edge orientations from ONE pass over `pairs` (the possibly
     // expensive upstream — e.g. the full MinHash-LSH — runs once),
     // partitioned by src and globally deduped in the SAME shuffle.
-    // Round-19 hardening (judge r18 item 5): the dedup used to be an
-    // unbounded per-task `java.util.HashSet` after `partitionBy` — at
-    // sf0.1 harmless, but a celebrity src (the q198 hot-star shape)
-    // concentrates its whole edge list in one task, and a non-spillable
-    // hash set there is an OOM at 100 TB. `distinctEdgesBySrc` keeps
-    // the single shuffle and the src placement, but dedups by sorting
-    // (src, dst) INSIDE the shuffle (Spark's sort spills) and dropping
-    // adjacent repeats streaming — O(1) task state. Same edge set:
-    // every copy of (a, b) shares a and therefore a partition, so
-    // within-partition dedup was already global.
+    // The dedup sorts (src, dst) inside the shuffle (Spark's sort
+    // spills) and drops adjacent repeats streaming — O(1) task state
+    // even for a celebrity src (the q198 hot-star shape), where a
+    // per-task hash set would be an OOM at 100 TB.
     import spark.implicits._
     val prs = pairs
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .as[(Long, Long)].rdd
-    val part = new HashPartitioner(math.max(1, prs.getNumPartitions))
-    val edges = dbg("edges")(pin(graft.core.KeyedRdds.distinctEdgesBySrc(
+    val part = new org.apache.spark.HashPartitioner(math.max(1, prs.getNumPartitions))
+    val edges = KeyedRdds.pin(KeyedRdds.distinctEdgesBySrc(
       prs.flatMap { case (a, b) =>
         if (a == b) Iterator.single((a, b)) else Iterator((a, b), (b, a)) },
-      part)))
+      part), reliable)
     // seed with the neighborhood min — a free first propagation round
     // (min over labels ≡ min over ids when labels are the identity);
     // reduceByKey on the already-src-partitioned edges is shuffle-free
-    var labels = dbg("seed")(pin(edges
+    val seed = edges
       .reduceByKey(part, (x: Long, y: Long) => math.min(x, y))
       .mapPartitions(_.map { case (id, mn) => (id, math.min(id, mn)) },
-        preservesPartitioning = true)))
-    var it = 0
-    // FULL materialization on purpose (count, not isEmpty): a partial
-    // action (take/isEmpty) computes only some partitions before the
-    // localCheckpoint truncates lineage, and the uncached partitions
-    // then throw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next full
-    // consumer. Every pin() below is likewise first touched by a
-    // full-scan action (the round count / the final toDF consumer).
-    var converged = dbg("empty-probe")(edges.count() == 0L)
-    while (!converged && it < maxIter) {
+        preservesPartitioning = true)
+    // labels only ever decrease, so a round that lowers no label is
+    // the fixpoint (an empty graph converges in its first round)
+    val (labels, converged) = KeyedRdds.fixpoint(seed, maxIter, reliable) { (labels, chg) =>
       // graph propagation: narrow join (both sides share `part`),
       // emitting (dst, lab(src)) into the round's single shuffle
       val prop0 = edges.join(labels, part)
@@ -2130,103 +2049,16 @@ object Dedup {
         prop0.union(pointer)
       }
       val mins = prop.reduceByKey(part, (x: Long, y: Long) => math.min(x, y))
-      val chg = spark.sparkContext.longAccumulator("cc-changed")
-      val next = pin(labels.leftOuterJoin(mins, part)
+      labels.leftOuterJoin(mins, part)
         .mapPartitions(_.map { case (id, (lab, m)) =>
           val nl = m.fold(lab)(math.min(lab, _))
           if (nl < lab) chg.add(1L)
           (id, nl)
-        }, preservesPartitioning = true))
-      val t0 = if (sys.env.contains("GRAFT_CC_DEBUG")) System.nanoTime() else 0L
-      next.count() // materializes the round; the accumulator is now set
-      if (t0 != 0L) System.err.println(
-        f"CC round $it job ${(System.nanoTime() - t0) / 1e9}%.3f s chg=${chg.value}")
-      // labels only ever decrease, so chg == 0 ⟺ fixpoint. A task
-      // retry re-adds its partition's changes — over-counting can only
-      // schedule a harmless extra round, never end the loop early.
-      converged = chg.value == 0L
-      labels.unpersist(blocking = false)
-      labels = next
-      it += 1
+        }, preservesPartitioning = true)
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"CC rounds: $it")
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    // the final labels must be MATERIALIZED before edges' blocks go
-    // away (a zero-round convergence — the empty graph — leaves the
-    // seed otherwise lazy, and its compute reads the edge checkpoint)
-    if (it == 0) labels.count()
     edges.unpersist(blocking = false)
+    require(converged, s"connectedComponents did not converge in $maxIter rounds")
     labels.toDF("doc_id", "cluster_id")
-  }
-
-  /** Connected components by large-star/small-star alternation (the
-    * "Connected Components in MapReduce and Beyond" algorithm) —
-    * O(log n) rounds on ANY graph, vs [[connectedComponents]]'s
-    * O(diameter). Same output contract (nodes of `pairs` labeled by
-    * their component minimum); use this when the pair graph may
-    * contain long chains (transitive near-dup runs), the plain
-    * min-propagation when components are dense and shallow (the
-    * common LSH case — fewer rounds in practice there). Per round:
-    * two neighborhood aggregations + joins, edges localCheckpointed;
-    * converged when the edge set reaches its star fixpoint.
-    *
-    *  - large-star: every node u connects its LARGER neighbors to
-    *    m = min(Γ(u) ∪ {u}) — halves long tails without breaking
-    *    connectivity;
-    *  - small-star: every node c connects its smaller neighbors and
-    *    itself to their minimum — collapses toward the root.
-    */
-  def connectedComponentsAlternating(pairs: DataFrame, maxIter: Int = 30,
-                                     checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = checkpointed(pairs, checkpointDir)
-    def canon(df: DataFrame): DataFrame =
-      df.select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    var edges = ckpt(canon(pairs.select(col("id_a").cast("long").as("x"),
-      col("id_b").cast("long").as("y"))))
-    var it = 0
-    var done = edges.isEmpty
-    while (!done && it < maxIter) {
-      // large-star over both orientations
-      val nbrs = edges.select(col("u").as("c"), col("v").as("n"))
-        .unionByName(edges.select(col("v").as("c"), col("u").as("n")))
-      val lsMin = nbrs.groupBy("c").agg(min(col("n")).as("mn"))
-        .select(col("c"), least(col("mn"), col("c")).as("m"))
-      val ls = canon(nbrs.join(lsMin, "c")
-        .filter(col("n") > col("c"))
-        .select(col("n").as("x"), col("m").as("y")))
-      // small-star: center every node on its larger endpoint
-      val sNbrs = ls.select(col("v").as("c"), col("u").as("n")) // n < c by canon
-      val ssMin = sNbrs.groupBy("c").agg(min(col("n")).as("m"))
-      val next = ckpt(canon(
-        sNbrs.join(ssMin, "c").select(col("n").as("x"), col("m").as("y"))
-          .unionByName(ssMin.select(col("c").as("x"), col("m").as("y")))))
-      // Convergence in two tiers (round 13 — this check used to be
-      // TWO exceptAll set-differences per round, the per-round cost
-      // that made this algorithm lose every A/B): (1) a cheap
-      // order-free fingerprint of each edge set — count + XOR-fold
-      // of xxhash64 row hashes (XOR: order-free AND overflow-free
-      // under ANSI, and canon()'s distinct guarantees no
-      // self-cancelling duplicate rows) — ONE aggregation per side;
-      // only if the fingerprints MATCH, (2) the exact exceptAll
-      // confirmation runs, i.e. once at the true fixpoint instead of
-      // every round (a 64-bit collision making unequal sets
-      // fingerprint-equal is caught by the exact tier — the probe
-      // can only save work, never change the answer).
-      def fp(df: DataFrame) = df.agg(
-        count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-      done = fp(next) == fp(edges) &&
-        next.exceptAll(edges).unionByName(edges.exceptAll(next)).isEmpty
-      edges = next
-      it += 1
-    }
-    require(done, s"connectedComponentsAlternating did not converge in $maxIter rounds")
-    // fixpoint is a star forest rooted at component minima
-    val nonRoots = edges.select(col("v").as("doc_id"), col("u").as("cluster_id"))
-    val roots = edges.select(col("u")).distinct()
-      .join(edges.select(col("v").as("u")).distinct(), Seq("u"), "left_anti")
-      .select(col("u").as("doc_id"), col("u").as("cluster_id"))
-    nonRoots.unionByName(roots)
   }
 
   /** n-gram Jaccard near-dup with prefix blocking: candidates share a

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.KeyedRdds
+
 /** Similarity search over an embedding column (`ARRAY<FLOAT>`):
   * brute-force cosine top-k as the exact baseline, and a
   * random-hyperplane LSH-bucketed variant as the scale path (pairs
@@ -203,12 +205,12 @@ object Similarity {
     * UnknownPartitioning), the exact per-round tax the round-18 CC
     * rewrite measured at 0.2–0.35 s at local[32] and O(edges) shuffled
     * bytes at scale. Now the CC loop's RDD discipline: one
-    * HashPartitioner fixed up front, `pin` (persist + localCheckpoint)
-    * with FULL-SCAN first actions only (the partial-action checkpoint
-    * trap — see connectedComponents), per-round integer arithmetic
-    * identical to the SQL form: `div` on non-negative longs ≡ Scala
-    * `/`, and the share sum is order-independent. Returned frame is
-    * checkpoint-backed; the caller releases (Bench/Verify hygiene).
+    * HashPartitioner fixed up front and [[KeyedRdds.fixpoint]] (pin,
+    * full-scan materialization per round, early stop once no rank
+    * changes), per-round integer arithmetic identical to the SQL
+    * form: `div` on non-negative longs ≡ Scala `/`, and the share sum
+    * is order-independent. Returned frame is checkpoint-backed; the
+    * caller releases it ([[graft.core.Materialize.release]]).
     */
   def pageRank(edges: DataFrame, rounds: Int = 5,
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
@@ -216,48 +218,40 @@ object Similarity {
     val base = 157286L // floor(0.15 * 2^20)
     val spark = edges.sparkSession
     import spark.implicits._
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    def pin[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.localCheckpoint()
-      rdd
-    }
     val prs = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .as[(Long, Long)].rdd
-    val part = new HashPartitioner(math.max(1, prs.getNumPartitions))
+    val part = new org.apache.spark.HashPartitioner(math.max(1, prs.getNumPartitions))
     // global distinct, placed by src once, spill-safe (sorted in the
     // shuffle, adjacent repeats dropped) — the CC edge discipline
-    val e = pin(graft.core.KeyedRdds.distinctEdgesBySrc(prs, part))
+    val e = KeyedRdds.pin(KeyedRdds.distinctEdgesBySrc(prs, part))
     // out-degree per src: narrow aggregation on the src-placed edges
     val deg = e.mapPartitions(_.map { case (s, _) => (s, 1L) },
         preservesPartitioning = true)
       .reduceByKey(part, _ + _)
-    val eDeg = pin(e.join(deg, part)) // narrow: both sides share `part`
+    val eDeg = KeyedRdds.pin(e.join(deg, part)) // narrow: both sides share `part`
     // node set = distinct(src ∪ dst): dst ids cross partitions — the
     // ONE extra setup shuffle (reduceByKey dedups map-side)
-    val nodes = pin(e
+    val rank0 = e
       .flatMap { case (s, d) => Iterator((s, 0L), (d, 0L)) }
-      .reduceByKey(part, (x, _) => x))
-    var rank = pin(nodes.mapValues(_ => 1048576L))
-    for (_ <- 1 to rounds) {
+      .reduceByKey(part, (x, _) => x)
+      .mapValues(_ => 1048576L)
+    // each round is a pure function of the previous ranks, so a round
+    // that changes no rank is the fixpoint and stopping there is exact
+    val (rank, _) = KeyedRdds.fixpoint(rank0, rounds) { (rank, changed) =>
       val shares = eDeg.join(rank, part) // narrow
         .map { case (_, ((dst, dg), r)) => (dst, r / dg) } // r_fp div deg
         .reduceByKey(part, _ + _) // the round's single shuffle, O(nodes)
-      val next = pin(nodes.leftOuterJoin(shares, part) // narrow
-        .mapPartitions(_.map { case (id, (_, in)) =>
-          (id, base + (85L * in.getOrElse(0L)) / 100L)
-        }, preservesPartitioning = true))
-      next.count() // FULL materialization before releasing the parent
-      rank.unpersist(blocking = false)
-      rank = next
+      rank.leftOuterJoin(shares, part) // narrow; rank's keys are the node set
+        .mapPartitions(_.map { case (id, (old, in)) =>
+          val r = base + (85L * in.getOrElse(0L)) / 100L
+          if (r != old) changed.add(1L)
+          (id, r)
+        }, preservesPartitioning = true)
     }
-    // rank is materialized (rounds >= 1, counted above); the loop
-    // intermediates can go. The returned frame reads rank's blocks.
+    // rank is materialized; the returned frame reads its blocks
     e.unpersist(blocking = false)
     eDeg.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
     rank.toDF("id", "r_fp")
       .withColumn("rank", col("r_fp").cast("double") / 1048576.0)
   }
@@ -898,14 +892,6 @@ object Similarity {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     maxBucket: Int = Int.MaxValue): DataFrame = {
-    def dbg[T](tag: String)(body: => T): T =
-      if (!sys.env.contains("GRAFT_CC_DEBUG")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"semanticPrune $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     val edges = knnGraph(emb, k, planes, idCol, vecCol, maxBucket)
       .filter(col("cosine") >= tau)
       .select(least(col("vec_id"), col("nbr_id")).as("id_a"),
@@ -913,18 +899,8 @@ object Similarity {
       .distinct()
     // kNN graphs chain through embedding space (12 rounds of
     // compressed min-propagation measured at sf0.1), so turn on path
-    // compression: rounds drop to O(log diameter). Routing through
-    // [[Dedup.connectedComponentsAlternating]] was A/B'd TWICE: with
-    // its original exceptAll-per-round convergence check it lost 2×;
-    // after that check became fingerprint-probe + one final exact
-    // confirm (round 13) it STILL lost — back-to-back same-box
-    // minima at sf0.1, q123 route: min-prop 3.440/3.535 s vs
-    // alternating 3.654/4.451 s (min of 4 and of 2). At this edge
-    // volume (O(n·k) kNN edges) the alternating form's two star
-    // phases per round — four shuffles — outweigh its fewer rounds;
-    // revisit only if tau drops enough to chain components an order
-    // of magnitude deeper.
-    val labels = dbg("cc")(Dedup.connectedComponents(edges, compress = true))
+    // compression: rounds drop to O(log diameter).
+    val labels = Dedup.connectedComponents(edges, compress = true)
       .withColumnRenamed("doc_id", "vec_id")
     // cluster sizes via groupBy + join-back, not a partition-only
     // window (judge r14 item 2): a giant semantic cluster — exactly
@@ -933,11 +909,11 @@ object Similarity {
     // partials and the join-back streams, with AQE skew-split
     // available. `assigned` is doc-count-sized two-long rows; its
     // localCheckpoint stops the CC label join re-running per consumer.
-    val assigned = dbg("assigned")(emb.select(col(idCol).cast("long").as("vec_id"))
+    val assigned = emb.select(col(idCol).cast("long").as("vec_id"))
       .join(labels, Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
-      .localCheckpoint())
+      .localCheckpoint()
     val sizes = assigned.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
     assigned.join(sizes, Seq("cluster_id"))
@@ -999,17 +975,15 @@ object Similarity {
     * Lloyd updates, and report the final assignment histogram with
     * exact fixed-point inertia.
     *
-    * Fully distributed — the model is a ONE-ROW DataFrame holding
-    * `array<array<double>>` centroids that rides a broadcast to the
-    * corpus scan; assignment is a per-row fold over the k candidate
-    * centroids (argmin, ties → lowest index), and the update is one
-    * (cluster, dim) aggregation whose means use 2²⁰ fixed-point sums
-    * (integer arithmetic — aggregation order cannot perturb them).
-    * Nothing is ever collected to the driver; per round the corpus
-    * is scanned twice (assign+update in one plan) and only
-    * (cluster, dim) partials shuffle. Empty clusters drop out and
-    * the survivors re-index densely by their old id order — both
-    * engines replay the same rule.
+    * The loop is [[pqCore]] with one subspace (`m = 1`): the same
+    * formula init (its per-subspace phase is 0 at sub 0), a broadcast
+    * one-row model, assignment as a per-row fold over the k
+    * candidate centroids (argmin, ties → lowest index), and one
+    * (cluster, dim) aggregation per round whose means use 2²⁰
+    * fixed-point sums (integer arithmetic — aggregation order cannot
+    * perturb them). Empty clusters drop out and the survivors
+    * re-index densely by their old id order — both engines replay
+    * the same rule.
     *
     * Determinism: distances are the shared left fold over exact
     * float→double casts; means are exact integer sums divided twice
@@ -1019,69 +993,27 @@ object Similarity {
     */
   def lloydRefine(emb: DataFrame, k: Int = 8, rounds: Int = 1,
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0; got k=$k rounds=$rounds")
-    val FP = 1048576.0 // 2^20
-    val init = (0 until k).map(c =>
-      (0 until 64).map(i => ((c * 37 + i * 13) % 41 - 20) / 10.0))
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    // native codegen loop — bit-equal to the aggregate(zip_with) fold
-    def sqDist(vec: Column, cv: Column): Column =
-      call_function("vec_sqdist", vec, cv)
-    def assign(model: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(model))
-        .withColumn("dists", transform(col("cents"), cv => sqDist(col(vecCol), cv)))
-        .select(col(idCol).as("id"), col(vecCol).as("vec"),
-          (array_position(col("dists"), array_min(col("dists"))) - 1)
-            .cast("int").as("c"),
-          array_min(col("dists")).as("d"))
-    def update(assigned: DataFrame): DataFrame =
-      assigned.select(col("c"), posexplode(col("vec")).as(Seq("dim", "x")))
-        .groupBy("c", "dim")
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("x").cast("double") * FP).cast("long")).as("s"))
-        .withColumn("m", col("s").cast("double") / FP / col("n"))
-        .groupBy("c")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s.getField("m")).as("cv"))
-        .agg(transform(array_sort(collect_list(struct(col("c"), col("cv")))),
-          s => s.getField("cv")).as("cents"))
-    val model0 = spark.range(1).select(
-      typedLit(init).as("cents"))
-    val finalModel = (0 until rounds).foldLeft(model0) { (m, _) =>
-      // one row; checkpoint keeps round r+1's plan from replaying
-      // round r's corpus aggregation on both assign arms. Round r's
-      // blocks die as soon as r+1 has materialized (eager checkpoint)
-      val next = update(assign(m)).localCheckpoint()
-      graft.core.Materialize.release(m)
-      next
-    }
-    assign(finalModel)
+                  vecCol: String = "embedding"): DataFrame =
+    pqCore(emb, 1, k, rounds, idCol, vecCol)._2
       .groupBy(col("c").as("cluster"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("d") * FP).cast("long")).as("inertia_fp"))
-      .withColumn("inertia", col("inertia_fp").cast("double") / FP)
-  }
+      .agg(count(lit(1)).as("n"), sum(col("d_fp")).as("inertia_fp"))
+      .withColumn("inertia", col("inertia_fp").cast("double") / 1048576.0)
 
   /** Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
     * standard way a billion-vector ANN index fits in memory: split
     * each vector into `m` subvectors, k-means each subspace
-    * independently ([[lloydRefine]] per subspace, same deterministic
-    * init/update recipe with a per-subspace phase so codebooks
+    * independently (the deterministic Lloyd recipe [[lloydRefine]]
+    * runs at `m = 1`, with a per-subspace init phase so codebooks
     * differ), and store each vector as `m` byte-sized codes — 64
     * float dims become 4 codes, a 64× memory cut with the
     * reconstruction error this op reports.
     *
-    * Scale shape, identical per round to [[lloydRefine]] but with
-    * `sub` folded into every key: the corpus explodes into
-    * (vector × m) subvector rows ONCE, assignment is a broadcast of
-    * the (m·k·subdim)-double model — model-sized, never corpus-sized
-    * — and the update is one (sub, c, dim)-keyed aggregation with
-    * map-side partials. Rounds chain through localCheckpoint exactly
-    * like lloydRefine (each round's one-row model materializes; the
-    * previous round's blocks release). NOTHING here collects to the
-    * driver.
+    * Scale shape, with `sub` folded into every key: the corpus
+    * explodes into (vector × m) subvector rows ONCE, assignment is a
+    * broadcast of the (m·k·subdim)-double model — model-sized, never
+    * corpus-sized — and the update is one (sub, c, dim)-keyed
+    * aggregation with map-side partials whose ≤ m·k·subdim result
+    * rows collect to the driver to assemble the next one-row model.
     *
     * Determinism is the q158 contract: centroid updates snap
     * component sums to ⌊x·2²⁰⌋ fixed point (aggregation-order-proof
@@ -1125,7 +1057,7 @@ object Similarity {
     */
   private def pqCore(emb: DataFrame, m: Int, k: Int, rounds: Int,
                      idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    val dim = 64 // fixture contract, as lloydRefine
+    val dim = 64 // fixture contract
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(k > 0 && rounds >= 0, s"need k > 0, rounds >= 0; got k=$k rounds=$rounds")
     val sl = dim / m

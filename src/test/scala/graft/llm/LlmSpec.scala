@@ -1092,6 +1092,18 @@ class LlmSpec extends SparkSpec {
     assert(t == Seq((1, "a", "b", 1L)))
   }
 
+  test("bpeTrain: releases every checkpoint it pins, re-pins included") {
+    // 30 distinct symbols → 29 possible merges, so 17 rounds all run
+    // and re-pin the corpus at rounds 8 and 16
+    val text = (0 until 30).map(i => f"t$i%02d").mkString(" ")
+    val d = Seq((0L, text), (1L, text)).toDF("doc_id", "text")
+    val before = graft.core.Materialize.liveIds(spark)
+    val got = Dedup.bpeTrain(d, "doc_id", "text", rounds = 17).collect()
+    assert(got.length == 17)
+    val leaked = graft.core.Materialize.liveIds(spark) -- before
+    assert(leaked.isEmpty, s"bpeTrain left RDDs pinned: $leaked")
+  }
+
   test("boilerplateStrip: hot segments drop everywhere, order kept, crumbs immune") {
     val bp = "subscribe to our newsletter"
     val refrain = "the bells toll again and again tonight"
@@ -2755,6 +2767,21 @@ class LlmSpec extends SparkSpec {
     assert(got(0L) > got(2L) && got(0L) > got(1L))
     // spokes with no inbound sit at the damped base
     assert(got(2L) == 157286L && got(3L) == 157286L)
+  }
+
+  test("Materialize.release frees connectedComponents and pageRank results") {
+    val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L), (0L, 1L), (7L, 8L))
+      .toDF("src", "dst")
+    val before = graft.core.Materialize.liveIds(spark)
+    val cc = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+    val pr = Similarity.pageRank(edges, rounds = 5)
+    assert(cc.count() == 7 && pr.count() == 7)
+    assert((graft.core.Materialize.liveIds(spark) -- before).nonEmpty,
+      "both results read pinned blocks until released")
+    graft.core.Materialize.release(cc)
+    graft.core.Materialize.release(pr)
+    val leaked = graft.core.Materialize.liveIds(spark) -- before
+    assert(leaked.isEmpty, s"released results left RDDs pinned: $leaked")
   }
 
   test("pqRecall: duplicates are always recalled; counts bounded and consistent") {

@@ -106,11 +106,10 @@ class TemporalSpec extends SparkSpec {
     assert(new java.io.File(
       new org.apache.hadoop.fs.Path(dir).toUri.getPath).listFiles().nonEmpty)
     val chain = (0L until 19L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val altLocal = Dedup.connectedComponentsAlternating(chain)
+    val chainLocal = Dedup.connectedComponents(chain).as[(Long, Long)].collect().toMap
+    val chainReliable = Dedup.connectedComponents(chain, checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
-    val altReliable = Dedup.connectedComponentsAlternating(chain, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(altReliable == altLocal)
+    assert(chainReliable == chainLocal)
   }
 
   test("connectedComponents: hot-star graph with heavy pair duplication (spill-safe dedup)") {
@@ -164,7 +163,23 @@ class TemporalSpec extends SparkSpec {
     assert(ccz.length == 20 && ccz.forall(_._2 == 0L))
   }
 
-  test("alternating (large-star/small-star) CC equals min propagation on random graphs") {
+  /** Driver-side union-find reference: every node of `pairs` mapped
+    * to its component's minimum id (roots are always the smaller id).
+    */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(x => x -> find(x)).toMap
+  }
+
+  test("connectedComponents matches union-find: random graphs, reversed chain") {
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 8) {
       val n = 8 + rnd.nextInt(20)
@@ -173,19 +188,19 @@ class TemporalSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
       if (raw.nonEmpty) {
         val pairs = raw.toDF("id_a", "id_b")
-        val a = Dedup.connectedComponentsAlternating(pairs).as[(Long, Long)].collect().toMap
+        val want = unionFind(raw)
         val b = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-        assert(a == b, s"trial $trial: $raw")
+        assert(b == want, s"trial $trial: $raw")
         val c = Dedup.connectedComponents(pairs, compress = true)
           .as[(Long, Long)].collect().toMap
-        assert(c == b, s"trial $trial (compress): $raw")
+        assert(c == want, s"trial $trial (compress): $raw")
       }
     }
-    // worst case for min-prop, logarithmic for alternation
+    // worst case for min propagation: the label walks the whole chain
     val chain = (0L until 40L).map(i => (i + 1, i)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponentsAlternating(chain).as[(Long, Long)].collect()
+    val cc = Dedup.connectedComponents(chain).as[(Long, Long)].collect()
     assert(cc.length == 41 && cc.forall(_._2 == 0L))
-    assert(Dedup.connectedComponentsAlternating(
+    assert(Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("id_a", "id_b")).count() == 0)
   }
 
